@@ -1,9 +1,10 @@
 package graft.plans
 
-import graft.CkptLocalOps
-import org.apache.spark.sql.{Column, DataFrame}
+import java.math.{BigDecimal => JBigDecimal}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Distributed running (prefix) sums over a global ordering.
   *
@@ -31,6 +32,10 @@ import org.apache.spark.sql.functions._
   * input is evaluated three times (bounds pass, totals branch, local
   * scan branch); callers scanning an expensive upstream should persist
   * it first.
+  *
+  * When only the maxima of the running sums are wanted, [[maxAt]] stops
+  * after step 2: one job reduces each bucket to a summary row and the
+  * driver chains the carries over those ≤ numBuckets rows.
   *
   * The order defined by `orderCols` MUST be total (include a unique
   * tiebreak column) or running values at ties are nondeterministic.
@@ -60,46 +65,9 @@ object PrefixSum {
       sumCols: Seq[(String, String)], uniformBounds: Boolean = false,
       knownRange: Option[(Double, Double)] = None,
       groupCols: Seq[String] = Nil): DataFrame = {
-    val spark = df.sparkSession
-    val nBuckets = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
-    // Boundary literals: deterministic, so every recomputation assigns
-    // every row the same bucket.
-    //  - default: Greenwald-Khanna quantiles (no RNG) — robust to any key
-    //    distribution, costs one sketch aggregation pass;
-    //  - uniformBounds: min/max + even split — one cheap min/max agg,
-    //    right when the caller knows the key is near-uniform (event
-    //    timestamps); correctness never depends on balance, only the
-    //    local-scan parallelism does;
-    //  - knownRange: the caller already knows (or can compute more
-    //    cheaply upstream) the [lo, hi] span — skips the eager pass over
-    //    `df` entirely, making the whole scan a single job.
-    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    val bounds =
-      if (probs.isEmpty) Array.empty[Double]
-      else if (knownRange.isDefined || uniformBounds) {
-        val (lo, hi) = knownRange.getOrElse {
-          val mm = df.agg(min(col(bucketCol)).cast("double"),
-            max(col(bucketCol)).cast("double")).head()
-          if (mm.isNullAt(0)) (0.0, 0.0)
-          else (mm.getDouble(0), mm.getDouble(1))
-        }
-        if (lo == hi) Array.empty[Double]
-        else probs.map(p => lo + (hi - lo) * p).distinct.sorted
-      } else df.stat.approxQuantile(bucketCol, probs, 0.001).distinct.sorted
-    val bucketExpr =
-      if (bounds.isEmpty) lit(0)
-      else bounds.map(b => when(col(bucketCol) > lit(b), 1).otherwise(0))
-        .reduce(_ + _)
-    val bucketed = df.withColumn("__bucket", bucketExpr)
-
-    val w = Window
-      .partitionBy((groupCols.map(col) :+ col("__bucket")): _*)
-      .orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = sumCols.foldLeft(bucketed) { case (d, (src, dst)) =>
-      d.withColumn(dst, sum(col(src)).over(w))
-    }
+    val bucketed = df.withColumn("__bucket",
+      bucketOf(df, bucketCol, uniformBounds, knownRange))
+    val local = localSums(bucketed, orderCols, sumCols, groupCols)
 
     // Per-bucket totals → exclusive prefix (carry-ins), computed LAZILY:
     // an unpartitioned window over the ≤ nBuckets total rows (one task on
@@ -129,13 +97,124 @@ object PrefixSum {
 
     val joined = local.join(broadcast(carries), joinCond, "left")
     sumCols.foldLeft(joined) { case (d, (src, dst)) =>
-      // Carry-in is exact decimal; cast back to the running column's type
-      // so integer-delta scans stay integral end-to-end.
-      d.withColumn(dst,
-        (col(dst) + coalesce(col(s"__carry_$src"), lit(0)))
-          .cast(d.schema(dst).dataType))
+      // Carry-in is exact; the sum is cast back to the running column's
+      // type so integer-delta scans stay integral end-to-end.
+      d.withColumn(dst, addExact(col(dst),
+        coalesce(col(s"__carry_$src"), lit(0)), d.schema(dst).dataType))
     }.drop(Seq("__bucket", "__cbucket") ++ groupCols.map(g => s"__cg_$g") ++
       srcs.map(s => s"__carry_$s"): _*)
+  }
+
+  /** `a + b` as type `t`. For s > 6 Spark types decimal(38,s) +
+    * decimal(38,s) as decimal(38,s-1) and rounds the last digit away;
+    * adding at one integer digit less keeps scale s (a sum past
+    * 10^(37-s) then raises under ANSI instead of rounding). For s <= 6
+    * Spark keeps scale s and nothing is narrowed.
+    */
+  private def addExact(a: Column, b: Column, t: DataType): Column = t match {
+    case d: DecimalType
+        if d.precision == DecimalType.MAX_PRECISION && d.scale > 6 =>
+      val narrow = DecimalType(d.precision - 1, d.scale)
+      (a.cast(narrow) + b.cast(narrow)).cast(t)
+    case _ => (a + b).cast(t)
+  }
+
+  /** The maxima of the running sums [[scan]] would add, taken over the
+    * rows `at` selects, plus the `bucketCol` value of the row where the
+    * running `argMaxOf` (one of the `dst` names) peaks — the LATEST such
+    * row on a tie — without materializing the scan.
+    *
+    * Within a bucket every row's carry-in is the same, so a bucket's
+    * maximum is its carry plus its local maximum, and so is its argmax.
+    * [[bucketSummaries]] reduces each bucket to its delta totals, local
+    * maxima and local argmax in one job (the groupBy shares the window's
+    * bucket partitioning: no second exchange); the driver collects those
+    * ≤ numShufflePartitions rows — never data-sized — and folds them
+    * exactly in BigDecimal, buckets in key order. Ties on `bucketCol`
+    * never straddle buckets, so a later bucket winning a tie on the
+    * running value is the latest row winning it.
+    *
+    * `sumCols` must be integral or decimal (exact folding). A row whose
+    * running value is NULL (every delta up to it NULL) counts for no
+    * maximum and ranks below every non-NULL value for the argmax, as
+    * `max_by` ranks it over the scan. Returns a one-row LOCAL frame: one
+    * column per `dst` in its running type (NULL when `at` selects no row)
+    * and `bucketCol`. Buckets split the [min, max] span of `bucketCol`
+    * evenly ([[scan]]'s `uniformBounds`); the input is evaluated once,
+    * plus the min/max pass unless `knownRange` is given.
+    */
+  def maxAt(df: DataFrame, bucketCol: String, orderCols: Seq[Column],
+      sumCols: Seq[(String, String)], at: Column, argMaxOf: String,
+      knownRange: Option[(Double, Double)] = None): DataFrame = {
+    val dsts = sumCols.map(_._2)
+    val argIdx = dsts.indexOf(argMaxOf)
+    require(argIdx >= 0, s"argMaxOf '$argMaxOf' is not a running column")
+    val summaries = bucketSummaries(df, bucketCol, orderCols, sumCols, at,
+      argMaxOf, knownRange)
+    val runTypes = dsts.map(d => summaries.schema(s"__m_$d").dataType)
+    require(runTypes.forall(t => t == LongType || t.isInstanceOf[DecimalType]),
+      s"maxAt folds exactly: sum columns must be integral or decimal, got $runTypes")
+
+    def big(v: Any): JBigDecimal = v match {
+      case d: JBigDecimal => d
+      case l: java.lang.Long => JBigDecimal.valueOf(l)
+    }
+    val carry = Array.fill(sumCols.size)(JBigDecimal.ZERO)
+    val best = Array.fill[JBigDecimal](sumCols.size)(null)
+    var argRun: JBigDecimal = null
+    var argKey: Any = null
+    var nullRunKey: Any = null // latest `at` row whose running value is NULL
+    summaries.collect().sortBy(_.getAs[Int]("__bucket")).foreach { r =>
+      val a = r.getAs[Row]("__arg")
+      if (a != null && a.isNullAt(0)) nullRunKey = a.get(1)
+      else if (a != null) {
+        val v = carry(argIdx).add(big(a.get(0)))
+        if (argRun == null || v.compareTo(argRun) >= 0) {
+          argRun = v; argKey = a.get(1)
+        }
+      }
+      sumCols.indices.foreach { i =>
+        val m = r.getAs[Any](s"__m_${dsts(i)}")
+        if (m != null) {
+          val v = carry(i).add(big(m))
+          if (best(i) == null || v.compareTo(best(i)) > 0) best(i) = v
+        }
+        val t = r.getAs[Any](s"__t_${sumCols(i)._1}")
+        if (t != null) carry(i) = carry(i).add(big(t))
+      }
+    }
+
+    val values = best.zip(runTypes).map {
+      case (null, _) => null
+      case (v, LongType) => v.longValueExact()
+      case (v, _) => v
+    }
+    val schema = StructType(dsts.zip(runTypes).map {
+      case (d, t) => StructField(d, t) } :+
+      StructField(bucketCol, df.schema(bucketCol).dataType))
+    df.sparkSession.createDataFrame(java.util.List.of(
+      Row.fromSeq(values.toSeq :+ (if (argRun == null) nullRunKey else argKey))),
+      schema)
+  }
+
+  /** [[maxAt]]'s per-bucket reduction, one row per non-empty bucket:
+    * `__bucket`, the delta totals `__t_<src>`, the maxima of the local
+    * running sums at `at` rows `__m_<dst>`, and `__arg`, the largest
+    * (local running `argMaxOf`, `bucketCol`) pair at `at` rows.
+    */
+  private[plans] def bucketSummaries(df: DataFrame, bucketCol: String,
+      orderCols: Seq[Column], sumCols: Seq[(String, String)], at: Column,
+      argMaxOf: String, knownRange: Option[(Double, Double)]): DataFrame = {
+    val bucketed = df.withColumn("__bucket",
+      bucketOf(df, bucketCol, uniformBounds = true, knownRange))
+    val local = localSums(bucketed, orderCols, sumCols, Nil)
+      .withColumn("__at", at)
+    val aggs = sumCols.map { case (src, _) => sum(col(src)).as(s"__t_$src") } ++
+      sumCols.map { case (_, dst) =>
+        max(when(col("__at"), col(dst))).as(s"__m_$dst") } :+
+      max(when(col("__at"), struct(col(argMaxOf), col(bucketCol))))
+        .as("__arg")
+    local.groupBy("__bucket").agg(aggs.head, aggs.tail: _*)
   }
 
   /** `row_number()` per group under a total order, WITHOUT the per-group
@@ -158,4 +237,55 @@ object PrefixSum {
     scan(df.withColumn("__one", lit(1L)), bucketCol, orderCols,
       Seq("__one" -> dst), uniformBounds = uniformBounds,
       groupCols = groupCols).drop("__one")
+
+  /** The local step [[scan]] and [[maxAt]] share: each `dst` is the
+    * running sum of its `src` within a (group, `__bucket`) partition under
+    * `orderCols`, not yet carried in from earlier buckets.
+    */
+  private def localSums(bucketed: DataFrame, orderCols: Seq[Column],
+      sumCols: Seq[(String, String)], groupCols: Seq[String]): DataFrame = {
+    val w = Window
+      .partitionBy((groupCols.map(col) :+ col("__bucket")): _*)
+      .orderBy(orderCols: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    sumCols.foldLeft(bucketed) { case (d, (src, dst)) =>
+      d.withColumn(dst, sum(col(src)).over(w))
+    }
+  }
+
+  /** The bucket id of every row: `bucketCol`'s position among
+    * ~numShufflePartitions contiguous range buckets, as a when-chain over
+    * boundary literals — a pure function of row values, so every
+    * recomputation assigns every row the same bucket. Boundaries:
+    *  - default: Greenwald-Khanna quantiles (no RNG) — robust to any key
+    *    distribution, costs one sketch aggregation pass;
+    *  - uniformBounds: min/max + even split — one cheap min/max agg,
+    *    right when the caller knows the key is near-uniform (event
+    *    timestamps); correctness never depends on balance, only the
+    *    local-scan parallelism does;
+    *  - knownRange: the caller already knows (or can compute more
+    *    cheaply upstream) the [lo, hi] span — skips the eager pass over
+    *    `df` entirely.
+    */
+  private def bucketOf(df: DataFrame, bucketCol: String,
+      uniformBounds: Boolean, knownRange: Option[(Double, Double)]): Column = {
+    val nBuckets =
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
+    val bounds =
+      if (probs.isEmpty) Array.empty[Double]
+      else if (knownRange.isDefined || uniformBounds) {
+        val (lo, hi) = knownRange.getOrElse {
+          val mm = df.agg(min(col(bucketCol)).cast("double"),
+            max(col(bucketCol)).cast("double")).head()
+          if (mm.isNullAt(0)) (0.0, 0.0)
+          else (mm.getDouble(0), mm.getDouble(1))
+        }
+        if (lo == hi) Array.empty[Double]
+        else probs.map(p => lo + (hi - lo) * p).distinct.sorted
+      } else df.stat.approxQuantile(bucketCol, probs, 0.001).distinct.sorted
+    if (bounds.isEmpty) lit(0)
+    else bounds.map(b => when(col(bucketCol) > lit(b), 1).otherwise(0))
+      .reduce(_ + _)
+  }
 }

@@ -1,6 +1,6 @@
 package graft.sizing
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Global workload aggregates (SURVEY §2.5, A1–A9) — the reference keeps
@@ -17,70 +17,74 @@ object Aggregates {
     * a double; decimal(38) is exact and deterministic under any partition
     * order (Spark 4 runs ANSI mode, so a long overflow would throw).
     */
-  def global(derived: DataFrame): DataFrame =
-    derived.agg(globalExprs.head, globalExprs.tail: _*)
+  def global(derived: DataFrame): DataFrame = {
+    val exprs = globalExprs(None)
+    derived.agg(exprs.head, exprs.tail: _*)
+  }
 
-  /** The A1–A6 aggregate expressions, exposed so [[Report]] can fuse them
-    * with the rounded-maxima set into ONE pass over the kept rows.
+  /** The A1–A6 aggregate expressions over the rows `guard` admits (every
+    * row when None). [[Report.routedCounts]] folds them, guarded by the
+    * kept flow, into its one pre-pass over all routed rows; there A2 is
+    * left out — the report reads the pre-pass's own Q10 roster over kept
+    * and pruned rows, and a distinct aggregate would make Spark rewrite
+    * the plan with an Expand.
     */
-  private[sizing] val globalExprs: Seq[org.apache.spark.sql.Column] = Seq(
-      count(lit(1)).as("total_queries"), // A1
-      count_distinct(col("pool")).as("n_pools"), // A2
-      array_join(sort_array(collect_set(col("pool"))), ",").as("pools"),
-      max(col("num_backends")).as("max_backends"), // A3 ×6
-      max(col("avg_vcores_per_node")).as("max_vcores"),
-      max(col("avg_mem_per_node")).as("max_mem"),
-      max(col("avg_cache_per_node")).as("max_data"),
-      max(col("avg_data_rate_per_node")).as("max_data_rate"),
-      max(col("avg_spill_per_node")).as("max_spill"),
+  private[sizing] def globalExprs(
+      guard: Option[Column]): Seq[Column] = {
+    def g(c: Column): Column = guard.fold(c)(when(_, c))
+    val a2 = if (guard.isDefined) Nil else Seq(
+      count_distinct(col("pool")).as("n_pools"),
+      array_join(sort_array(collect_set(col("pool"))), ",").as("pools"))
+    (count(g(lit(1))).as("total_queries") +: a2) ++ Seq( // A1 (+ A2)
+      max(g(col("num_backends"))).as("max_backends"), // A3 ×6
+      max(g(col("avg_vcores_per_node"))).as("max_vcores"),
+      max(g(col("avg_mem_per_node"))).as("max_mem"),
+      max(g(col("avg_cache_per_node"))).as("max_data"),
+      max(g(col("avg_data_rate_per_node"))).as("max_data_rate"),
+      max(g(col("avg_spill_per_node"))).as("max_spill"),
       // A4 argmax with deterministic tiebreak: highest pods, then highest
       // query_id (the reference's `>` keeps the first-seen row, py:272–274,
       // which is input-order-dependent — not reproducible distributed; we
-      // document the fixed tiebreak instead).
-      max_by(col("query_id"), struct(col("min_executor_pod"), col("query_id")))
+      // document the fixed tiebreak instead). max_by skips rows whose
+      // ordering is NULL, so only the ordering needs the guard.
+      max_by(col("query_id"),
+        g(struct(col("min_executor_pod"), col("query_id"))))
         .as("max_pods_query_id"),
-      max(col("min_executor_pod")).as("min_executor_pod_workload"),
+      max(g(col("min_executor_pod"))).as("min_executor_pod_workload"),
       // A6 weighted sums (py:300–305)
-      sum(((col("duration_millis") - col("admission_wait")) / 1000.0)
-        .cast("decimal(38,6)")).cast("double").as("total_query_time_sec"),
-      sum((col("reqd_agg_mem") * col("duration_sec")).cast("decimal(38,6)"))
+      sum(g(((col("duration_millis") - col("admission_wait")) / 1000.0)
+        .cast("decimal(38,6)"))).cast("double").as("total_query_time_sec"),
+      sum(g((col("reqd_agg_mem") * col("duration_sec")).cast("decimal(38,6)")))
         .cast("double").as("util_mem_gb_sec"),
-      sum(col("cpu_time_sec").cast("decimal(38,6)"))
+      sum(g(col("cpu_time_sec").cast("decimal(38,6)")))
         .cast("double").as("util_cpu_sec"),
-      sum((col("reqd_cache_gb") * col("duration_sec")).cast("decimal(38,6)"))
+      sum(g((col("reqd_cache_gb") * col("duration_sec")).cast("decimal(38,6)")))
         .cast("double").as("util_cache_gb_sec"),
-      sum((col("memory_spilled_gb") * col("duration_sec"))
-        .cast("decimal(38,6)")).cast("double").as("util_spill_gb_sec"))
+      sum(g((col("memory_spilled_gb") * col("duration_sec"))
+        .cast("decimal(38,6)"))).cast("double").as("util_spill_gb_sec"))
+  }
 
-  /** Maxima over the 2dp-ROUNDED per-node averages (the reference rounds
-    * at derivation, py:223–227, and compares the rounded values,
-    * py:279–292). Prefixed names — the UN-rounded A3 maxima in
-    * [[globalExprs]] already own `max_vcores` etc.
-    */
-  private[sizing] val roundedMaxExprs: Seq[org.apache.spark.sql.Column] = Seq(
-    max(round(col("avg_vcores_per_node"), 2)).as("r_max_vcores"),
-    max(round(col("avg_mem_per_node"), 2)).as("r_max_mem"),
-    max(round(col("avg_cache_per_node"), 2)).as("r_max_data"),
-    max(round(col("avg_data_rate_per_node"), 2)).as("r_max_data_rate"),
-    max(round(col("avg_spill_per_node"), 2)).as("r_max_spill"))
+  /** The size matrix's dimensions and the pod column each one buckets. */
+  private[sizing] val matrixDims: Seq[(String, String)] = Seq(
+    "count" -> "min_executor_pod",
+    "cache" -> "min_executor_pod_data",
+    "mem" -> "min_executor_pod_mem",
+    "cpu" -> "min_executor_pod_cpu",
+    "spill" -> "min_executor_pod_spill")
 
   /** A5: the (tsize × dimension) count matrix. The reference maintains five
     * independent histograms (py:294–298); we unpivot the five bucketed
     * columns with `stack` and pivot back — one shuffle on a ≤25-key space.
     */
   def sizeMatrix(derived: DataFrame): DataFrame = {
-    val bucketed = derived.select(
-      Bucketing.tsize(col("min_executor_pod")).as("t_count"),
-      Bucketing.tsize(col("min_executor_pod_data")).as("t_cache"),
-      Bucketing.tsize(col("min_executor_pod_mem")).as("t_mem"),
-      Bucketing.tsize(col("min_executor_pod_cpu")).as("t_cpu"),
-      Bucketing.tsize(col("min_executor_pod_spill")).as("t_spill"))
+    val bucketed = derived.select(matrixDims.map { case (d, c) =>
+      Bucketing.tsize(col(c)).as(s"t_$d") }: _*)
+    val pairs = matrixDims.map { case (d, _) => s"'$d', t_$d" }
     bucketed
-      .select(expr(
-        """stack(5, 'count', t_count, 'cache', t_cache, 'mem', t_mem,
-          |'cpu', t_cpu, 'spill', t_spill) AS (dimension, tsize)""".stripMargin))
+      .select(expr(s"stack(${matrixDims.size}, ${pairs.mkString(", ")})" +
+        " AS (dimension, tsize)"))
       .groupBy("tsize")
-      .pivot("dimension", Seq("count", "cache", "mem", "cpu", "spill"))
+      .pivot("dimension", matrixDims.map(_._1))
       .count()
       .na.fill(0L)
   }
@@ -103,15 +107,10 @@ object Aggregates {
   }
 
   /** A9: dimensions (fixed order — Q13 stance) with nonzero counts at the
-    * workload's tsize row.
+    * workload's tsize row of the matrix (tsize -> dimension -> count).
     */
-  def constrainedBy(matrix: Array[org.apache.spark.sql.Row],
-      workloadTsize: String): Seq[String] = {
-    matrix.find(_.getAs[String]("tsize") == workloadTsize) match {
-      case Some(r) =>
-        Seq("cache", "mem", "cpu", "spill")
-          .filter(d => r.getAs[Long](d) > 0)
-      case None => Nil
-    }
-  }
+  def constrainedBy(matrix: Map[String, Map[String, Long]],
+      workloadTsize: String): Seq[String] =
+    matrix.get(workloadTsize).fold(Seq.empty[String])(r =>
+      Seq("cache", "mem", "cpu", "spill").filter(d => r.getOrElse(d, 0L) > 0))
 }

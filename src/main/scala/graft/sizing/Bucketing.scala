@@ -39,6 +39,9 @@ object Bucketing {
       .when(gb <= 8000, "LARGE")
       .otherwise("CUSTOM")
 
+  /** The t-shirt sizes in ascending order, as [[tsize]] names them. */
+  val sizes: Seq[String] = Seq("XSMALL", "SMALL", "MEDIUM", "LARGE", "CUSTOM")
+
   /** Driver-side scalar twin of [[tsize]] (report assembly, py:370). */
   def tsizeValue(pods: Long): String =
     if (pods <= 2) "XSMALL"

@@ -1,6 +1,5 @@
 package graft.sizing
 
-import graft.CkptLocalOps
 import graft.plans.PrefixSum
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,8 +9,9 @@ import org.apache.spark.sql.functions._
   *
   * This is the engine's equivalent of `python impala_query_sizing.py
   * sizing.conf` — same inputs, same output files, same report numbers,
-  * expressed as one declarative Spark plan per output instead of a
-  * row-at-a-time loop.
+  * expressed as a few declarative Spark passes instead of a row-at-a-time
+  * loop: one routing pre-pass for every count and report aggregate, one
+  * per sink, and one for the sweep.
   */
 object Pipeline {
 
@@ -98,7 +98,7 @@ object Pipeline {
     * sums are exact and order-independent; rendered values round to 2dp,
     * far below the 1e-9 quantization.
     */
-  private def sweepEvents(derived: DataFrame): DataFrame = {
+  private[sizing] def sweepEvents(derived: DataFrame): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,9)")
     val podsRaw = greatest(col("ratio_data"), col("ratio_mem"),
       col("ratio_cpu"), col("ratio_spill"))
@@ -122,10 +122,17 @@ object Pipeline {
       .select(col("query_id"), col("e.*"))
   }
 
-  /** Sweep-line maxima over the kept rows (EP3, py:351–396): distributed
-    * prefix scan + conditional maxima at start events only.
+  /** Sweep-line maxima over the kept rows (EP3, py:351–396): the maxima
+    * of the running sums at start events, and the start instant where the
+    * running pods peak — one [[PrefixSum.maxAt]] job over the events,
+    * returned as a one-row local frame. `range` is the [lo, hi] span of
+    * the instants when the caller already has it (the routing pre-pass
+    * computes it, [[Report.routedCounts]]); without it the bucket bounds
+    * cost one min/max pass first. The span only balances the buckets and
+    * never changes the result.
     */
-  def concurrency(derived: DataFrame): DataFrame = {
+  def concurrency(derived: DataFrame,
+      range: Option[(Double, Double)] = None): DataFrame = {
     val deltas = Seq("d_count", "d_pods", "d_cache", "d_mem", "d_cpu",
       "d_data_rate", "d_spill")
     // Guard: a row with an unparseable/missing end_time (schema allows
@@ -136,28 +143,20 @@ object Pipeline {
     // so they are excluded from the sweep (kept in CSV/aggregate paths).
     val withInstants = derived
       .filter(col("admitted_us").isNotNull && col("end_us").isNotNull)
-    // NOTE (round 18): ckptLocal on the event frame was tried and
-    // REVERTED — PrefixSum's three evaluations of this cheap explode are
-    // cheaper than materializing checkpoint blocks per call (q73 runs
-    // this per micro-batch; blocks accumulate until driver GC and the
-    // entry degraded 7.5 → 35 s at sf0.1).
-    val scanned = PrefixSum.scan(sweepEvents(withInstants), "ts_us",
-      Seq(col("ts_us"), col("kind"), col("query_id")),
-      deltas.map(d => d -> d.replace("d_", "run_")), uniformBounds = true)
-    scanned
-      .filter(col("d_count") > 0)
-      .agg(
-        max(col("run_count")).as("max_concurrent_queries"),
-        max(col("run_pods")).cast("double").as("max_pods_workload"),
-        max(col("run_cache")).cast("double").as("max_concurrent_cache"),
-        max(col("run_mem")).cast("double").as("max_concurrent_memory"),
-        max(col("run_cpu")).cast("double").as("max_concurrent_cores"),
-        max(col("run_data_rate")).cast("double")
-          .as("max_concurrent_data_rate"),
-        max(col("run_spill")).cast("double").as("max_concurrent_spill"),
-        // py:384 `>=`: at equal pods the LATEST start wins
-        max_by(col("ts_us"), struct(col("run_pods"), col("ts_us")))
-          .as("max_pods_workload_start_us"))
+    // py:384 `>=`: at equal pods the LATEST start wins (maxAt's tie rule)
+    PrefixSum.maxAt(sweepEvents(withInstants), "ts_us",
+        Seq(col("ts_us"), col("kind"), col("query_id")),
+        deltas.map(d => d -> d.replace("d_", "run_")),
+        at = col("d_count") > 0, argMaxOf = "run_pods", knownRange = range)
+      .select(
+        col("run_count").as("max_concurrent_queries"),
+        col("run_pods").cast("double").as("max_pods_workload"),
+        col("run_cache").cast("double").as("max_concurrent_cache"),
+        col("run_mem").cast("double").as("max_concurrent_memory"),
+        col("run_cpu").cast("double").as("max_concurrent_cores"),
+        col("run_data_rate").cast("double").as("max_concurrent_data_rate"),
+        col("run_spill").cast("double").as("max_concurrent_spill"),
+        col("ts_us").as("max_pods_workload_start_us"))
   }
 
   /** Full run: reads `cfg.inputFile`, writes the three sinks under
@@ -209,24 +208,25 @@ object Pipeline {
 
   private def finish(spark: SparkSession, cfg: SizingConfig, raw: DataFrame,
       outDir: String, writeSkipSink: Boolean = true): SizingReport = {
-    // The sinks plus ~8 report aggregations are independent actions; cache
-    // the adapted querylog once so the source (CSV scan or REST pages) is
-    // read a single time and every pass sees identical data.
+    // The routing pre-pass, the sinks and the sweep are independent
+    // actions; cache the adapted querylog once so the source (CSV scan or
+    // REST pages) is read a single time and every pass sees identical
+    // data.
     val cached = raw.persist()
-    // Round 18 (guide §5 caching): the DERIVED frame is read by 7
-    // downstream actions (2 prune + 5 kept consumers) — without its own
-    // cache each action re-runs Formulas.derive's ~30-column arithmetic
-    // over the cached raw. One cache on the pre-split derived frame;
-    // kept/pruned stay cheap filters over it, skipped is a cheap filter
-    // over raw (no derivation) and stays uncached.
+    // The DERIVED frame is read by the pre-pass, the kept and prune sinks
+    // and the sweep — without its own cache each action re-runs
+    // Formulas.derive's ~30-column arithmetic over the cached raw. One
+    // cache on the pre-split derived frame; kept/pruned stay cheap
+    // filters over it, skipped is a cheap filter over raw (no derivation)
+    // and stays uncached.
     val pooled = Routing.poolFilter(cached, cfg)
     val skipped = pooled.filter(Routing.skipPredicate)
     val derived = Formulas
       .derive(pooled.filter(!Routing.skipPredicate), cfg).persist()
     val (kept, pruned) = Routing.pruneSplit(derived, cfg)
     try {
-      // ONE routing pre-pass replaces the per-sink isEmpty probes AND the
-      // report's prune count / pool roster actions (Report.routedCounts)
+      // ONE routing pre-pass: the per-sink counts, every report aggregate
+      // over the kept rows and the sweep's instant span (Report.routedCounts)
       val pre = Report.routedCounts(kept, pruned, skipped)
 
       outputRow(kept).write.mode("overwrite").option("header", "true")
@@ -242,7 +242,8 @@ object Pipeline {
             col("start_time"), col("end_time")).as("value"))
           .write.mode("overwrite").text(s"$outDir/${cfg.skipQueryFile}")
 
-      Report.build(cfg, kept, concurrency(kept), pre)
+      Report.build(cfg, kept, concurrency(kept, Some(Report.sweepRange(pre))),
+        pre)
     } finally {
       derived.unpersist()
       cached.unpersist()

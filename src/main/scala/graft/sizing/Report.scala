@@ -1,6 +1,6 @@
 package graft.sizing
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The reference's five report sections (SURVEY §2.7 K4, py:399–458) as a
@@ -74,7 +74,7 @@ final case class SizingReport(
     sb ++= "\n\t\t\t    Query Counts\n"
     sb ++= "                     Cache       Mem         CPU         Spill\n"
     sb ++= "Size     Count       Constrained Constrained Constrained Constrained\n"
-    Seq("XSMALL", "SMALL", "MEDIUM", "LARGE", "CUSTOM").foreach { t =>
+    Bucketing.sizes.foreach { t =>
       val row = matrix.getOrElse(t, Map.empty)
       sb ++= ("%8s".format(t) +
         Seq("count", "cache", "mem", "cpu", "spill")
@@ -93,66 +93,95 @@ final case class SizingReport(
 object Report {
 
   /** ONE pre-pass over the routed flows, run by [[Pipeline]] BEFORE the
-    * sinks: total queries + pool roster (Q10 — both include pruned rows,
-    * never skipped ones) and the prune/skip counts. Replaces three
-    * separate driver actions (the kept∪pruned head, `pruned.count()`,
-    * and the sinks' `isEmpty` probes) with a single union aggregate;
-    * `count(when(...))` counts only the matching flow (COUNT skips the
-    * NULL of the un-matched branch), and `collect_set` likewise drops
-    * the NULL pools of skipped rows.
+    * sinks — a single union aggregate holding:
+    *  - total queries + pool roster (Q10 — both include pruned rows,
+    *    never skipped ones) and the prune/skip counts, which also drive
+    *    the sinks' lazy creation;
+    *  - every report aggregate over the kept rows, each guarded by the
+    *    kept flow: the A1/A3/A4/A6 expressions
+    *    ([[Aggregates.globalExprs]]), the maxima of the 2dp-rounded
+    *    per-node averages, and the 25 (tsize × dimension) matrix cells;
+    *  - the sweep's instant span over the kept rows that have both
+    *    instants, consumed via [[sweepRange]].
+    * `count(when(...))` counts only the matching rows (COUNT skips the
+    * NULL of the un-matched branch); `collect_set`, `max` and `sum`
+    * likewise drop the NULLs of the other flows.
     */
   def routedCounts(kept: DataFrame, pruned: DataFrame,
-      skipped: DataFrame): org.apache.spark.sql.Row =
-    kept.select(col("query_id"), col("pool"), lit("kept").as("flow"))
-      .unionByName(pruned.select(col("query_id"), col("pool"),
-        lit("pruned").as("flow")))
-      .unionByName(skipped.select(col("query_id"), col("pool"),
-        lit("skipped").as("flow")))
-      .agg(
+      skipped: DataFrame): Row = {
+    val isKept = col("flow") === "kept"
+    // The reference takes maxima over the 2dp-ROUNDED per-node averages
+    // (py:223–227 round at derivation, py:279–292 compare the rounded
+    // values). Rounding is monotone, so that is the rounded maximum:
+    // Spark shares the max's buffer with A3's and rounds once per run
+    // instead of once per row.
+    val roundedMax = Seq("vcores" -> "avg_vcores_per_node",
+      "mem" -> "avg_mem_per_node", "data" -> "avg_cache_per_node",
+      "data_rate" -> "avg_data_rate_per_node",
+      "spill" -> "avg_spill_per_node").map { case (n, c) =>
+        round(max(when(isKept, col(c))), 2).as(s"r_max_$n") }
+    val cells = for (t <- Bucketing.sizes; (d, c) <- Aggregates.matrixDims)
+      yield count(when(isKept && Bucketing.tsize(col(c)) === t, 1))
+        .as(cell(t, d))
+    val timed = isKept && col("admitted_us").isNotNull &&
+      col("end_us").isNotNull
+    val aggs = Seq(
         count(when(col("flow") =!= "skipped", 1)).as("n"),
         array_join(sort_array(collect_set(
           when(col("flow") =!= "skipped", col("pool")))), ",").as("pools"),
         count(when(col("flow") === "pruned", 1)).as("n_pruned"),
-        count(when(col("flow") === "skipped", 1)).as("n_skipped"))
+        count(when(col("flow") === "skipped", 1)).as("n_skipped")) ++
+      Aggregates.globalExprs(Some(isKept)) ++ roundedMax ++ cells ++ Seq(
+        min(when(timed, col("admitted_us"))).as("sweep_lo_us"),
+        max(when(timed, col("end_us"))).as("sweep_hi_us"))
+    def flow(df: DataFrame, name: String): DataFrame =
+      df.select(col("query_id"), col("pool"), lit(name).as("flow"))
+    kept.withColumn("flow", lit("kept"))
+      .unionByName(flow(pruned, "pruned"), allowMissingColumns = true)
+      .unionByName(flow(skipped, "skipped"), allowMissingColumns = true)
+      .agg(aggs.head, aggs.tail: _*)
       .head()
+  }
 
-  /** Assemble the report. Collects exactly THREE tiny results — the fused
-    * global + rounded-maxima row (ONE pass over kept), the size matrix,
-    * and the concurrency row; the routing counts arrive pre-computed in
-    * `pre` (see [[routedCounts]]). Down from six driver actions: at the
-    * battery's scale the fixed per-action floor, not data volume,
-    * dominated the e2e entry's cost.
-    *
-    * Parity notes: the reference takes maxima over the 2dp-ROUNDED
-    * per-node averages (py:223–227 round at derivation, py:279–292 compare
-    * the rounded values), so the maxima here round before aggregating.
-    * A1/A2 count pools/queries BEFORE the prune split (Q10, py:215–216).
+  private def cell(tsize: String, dim: String): String = s"m_${tsize}_$dim"
+
+  /** The kept rows' [lo, hi] instant span from the pre-pass, for
+    * [[Pipeline.concurrency]]'s bucket bounds; (0, 0) when no kept row
+    * has both instants (the sweep is then empty).
+    */
+  private[sizing] def sweepRange(pre: Row): (Double, Double) =
+    if (pre.isNullAt(pre.fieldIndex("sweep_lo_us"))) (0.0, 0.0)
+    else (pre.getAs[Long]("sweep_lo_us").toDouble,
+      pre.getAs[Long]("sweep_hi_us").toDouble)
+
+  /** Assemble the report from the pre-pass row `pre` (see
+    * [[routedCounts]]) and the one-row `concurrencyRow`
+    * ([[Pipeline.concurrency]]). Reading that row is the only action:
+    * every kept-row aggregate already arrived in `pre`, so `kept` is no
+    * longer read. The matrix keeps the shape of a (tsize × dimension)
+    * count table: one entry per t-shirt size with a nonzero cell.
     */
   def build(cfg: SizingConfig, kept: DataFrame, concurrencyRow: DataFrame,
-      pre: org.apache.spark.sql.Row): SizingReport = {
-    val fused = Aggregates.globalExprs ++ Aggregates.roundedMaxExprs
-    val g = kept.agg(fused.head, fused.tail: _*).head()
-
-    val matrixRows = Aggregates.sizeMatrix(kept).collect()
-    val matrix = matrixRows.map { r =>
-      r.getAs[String]("tsize") -> Seq("count", "cache", "mem", "cpu", "spill")
-        .map(d => d -> r.getAs[Long](d)).toMap
-    }.toMap
+      pre: Row): SizingReport = {
+    val matrix = Bucketing.sizes.map { t =>
+      t -> Aggregates.matrixDims.map { case (d, _) =>
+        d -> pre.getAs[Long](cell(t, d)) }.toMap
+    }.filter(_._2.values.exists(_ > 0)).toMap
 
     val c = concurrencyRow.head()
-    val podWorkload = g.getAs[Long]("min_executor_pod_workload")
+    val podWorkload = pre.getAs[Long]("min_executor_pod_workload")
     val tsizeWl = Bucketing.tsizeValue(podWorkload)
 
     SizingReport(
       totalQueries = pre.getAs[Long]("n"),
-      totalQueryTimeSec = g.getAs[Double]("total_query_time_sec"),
-      maxPodsQueryId = g.getAs[String]("max_pods_query_id"),
-      maxBackends = g.getAs[Int]("max_backends"),
-      maxVcores = g.getAs[Double]("r_max_vcores"),
-      maxData = g.getAs[Double]("r_max_data"),
-      maxSpill = g.getAs[Double]("r_max_spill"),
-      maxMem = g.getAs[Double]("r_max_mem"),
-      maxDataRate = g.getAs[Double]("r_max_data_rate"),
+      totalQueryTimeSec = pre.getAs[Double]("total_query_time_sec"),
+      maxPodsQueryId = pre.getAs[String]("max_pods_query_id"),
+      maxBackends = pre.getAs[Int]("max_backends"),
+      maxVcores = pre.getAs[Double]("r_max_vcores"),
+      maxData = pre.getAs[Double]("r_max_data"),
+      maxSpill = pre.getAs[Double]("r_max_spill"),
+      maxMem = pre.getAs[Double]("r_max_mem"),
+      maxDataRate = pre.getAs[Double]("r_max_data_rate"),
       pools = pre.getAs[String]("pools").split(",").toSeq.filter(_.nonEmpty),
       pruneCount = pre.getAs[Long]("n_pruned"),
       podLimit = cfg.podLimit,
@@ -166,8 +195,8 @@ object Report {
       minExecutorPodWorkload = podWorkload,
       maxPodsWorkload = c.getAs[Double]("max_pods_workload"),
       tsizeWorkload = tsizeWl,
-      constrainedBy = Aggregates.constrainedBy(matrixRows, tsizeWl),
+      constrainedBy = Aggregates.constrainedBy(matrix, tsizeWl),
       matrix = matrix,
-      utilizationPct = Aggregates.utilizationPct(g, cfg))
+      utilizationPct = Aggregates.utilizationPct(pre, cfg))
   }
 }

@@ -22,4 +22,13 @@ object SparkTestBase {
 
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  /** Runs `body` with the session confs `kv` set, then restores them. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val saved = kv.map { case (k, _) => k -> conf.getOption(k) }
+    kv.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
 }

@@ -123,4 +123,115 @@ class PrefixSumSpec extends SparkTestBase {
     }
     assert(got.toSeq == want)
   }
+
+  test("decimal(38,9) running sums keep all nine places") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val rows = (1L to 120L).map(i =>
+      (rnd.nextInt(30).toLong, i, BigDecimal(rnd.nextLong() % 1000000000L, 9)))
+    val df = rows.toDF("ts", "id", "d")
+      .withColumn("d", col("d").cast("decimal(38,9)")).repartition(3)
+    val got = PrefixSum.scan(df, "ts", Seq(col("ts"), col("id")),
+        Seq("d" -> "run"))
+      .select("ts", "id", "run").collect()
+      .map(r => (r.getLong(0), r.getLong(1), BigDecimal(r.getDecimal(2))))
+      .sortBy(t => (t._1, t._2))
+    var acc = BigDecimal(0)
+    val want = rows.sortBy(t => (t._1, t._2)).map { case (ts, id, d) =>
+      acc += d; (ts, id, acc)
+    }
+    assert(got.toSeq == want)
+  }
+
+  test("decimal(38,2) running sums reach 10^36 across buckets") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // each delta is 1.2e35 + 0.25; the total, 9.6e35 + 2, needs all 36
+    // integer digits decimal(38,2) has
+    val d = BigDecimal("120000000000000000000000000000000000.25")
+    val df = spark.createDataFrame(
+      java.util.List.of((1L to 8L).map(i => Row(i, d.bigDecimal)): _*),
+      StructType(Seq(StructField("ts", LongType),
+        StructField("d", DecimalType(38, 2)))))
+    withConf("spark.sql.shuffle.partitions" -> "4") {
+      val got = PrefixSum.scan(df, "ts", Seq(col("ts")), Seq("d" -> "run"))
+        .select("ts", "run").collect()
+        .map(r => r.getLong(0) -> BigDecimal(r.getDecimal(1))).sortBy(_._1)
+      assert(got.toSeq == (1L to 8L).map(i => i -> d * i))
+    }
+  }
+
+  /** maxAt's contract, stated on the full scan it replaces. */
+  private def scanMaxima(df: org.apache.spark.sql.DataFrame) =
+    PrefixSum.scan(df, "ts", Seq(col("ts"), col("id")),
+        Seq("a" -> "ra", "b" -> "rb"))
+      .filter(col("at"))
+      .agg(max("ra"), max("rb"), max_by(col("ts"), struct("ra", "ts")))
+      .head()
+
+  private def maxAt(df: org.apache.spark.sql.DataFrame) =
+    PrefixSum.maxAt(df, "ts", Seq(col("ts"), col("id")),
+      Seq("a" -> "ra", "b" -> "rb"), at = col("at"), argMaxOf = "ra").head()
+
+  test("maxAt equals the maxima of the full scan, latest row on ties") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    // few distinct ts and many zero deltas: the running `a` ties across
+    // rows, instants and buckets
+    val rows = (1L to 400L).map(i => (rnd.nextInt(25).toLong, i,
+      if (rnd.nextInt(3) == 0) 0L else rnd.nextInt(9) - 4L,
+      BigDecimal(rnd.nextInt(2000) - 1000, 9), rnd.nextBoolean()))
+    val df = rows.toDF("ts", "id", "a", "b", "at")
+      .withColumn("b", col("b").cast("decimal(38,9)")).repartition(4)
+    for (parts <- Seq(1, 7))
+      withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+        assert(maxAt(df) == scanMaxima(df), s"$parts partitions")
+      }
+    // one peak reached in two buckets: the later bucket's row wins
+    val twice = (1L to 100L).map(i => (i, i, i match {
+      case 10L | 80L => 5L; case 20L | 90L => -5L; case _ => 0L
+    }, BigDecimal(0), true)).toDF("ts", "id", "a", "b", "at")
+      .withColumn("b", col("b").cast("decimal(38,9)"))
+    withConf("spark.sql.shuffle.partitions" -> "7") {
+      assert(maxAt(twice) == scanMaxima(twice))
+      assert(maxAt(twice).getLong(2) == 89L)
+    }
+    val none = df.withColumn("at", lit(false))
+    assert(maxAt(none) == scanMaxima(none))
+    assert(maxAt(none).toSeq.forall(_ == null))
+  }
+
+  test("maxAt ranks NULL running values as the scan's max_by does") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(31)
+    // the first 60 deltas are NULL: several buckets start with (or hold
+    // only) NULL running values
+    val rows = (1L to 300L).map(i => (rnd.nextInt(40).toLong, i,
+      if (i <= 60 || rnd.nextInt(4) == 0) None else Some(rnd.nextInt(9) - 4L),
+      BigDecimal(rnd.nextInt(2000) - 1000, 9), rnd.nextBoolean()))
+    val df = rows.toDF("ts", "id", "a", "b", "at")
+      .withColumn("b", col("b").cast("decimal(38,9)")).repartition(4)
+    // every running `a` NULL: no maximum, and the latest `at` row wins
+    val allNull = df.withColumn("a", lit(null).cast("long"))
+    for (parts <- Seq(1, 7)) withConf(
+        "spark.sql.shuffle.partitions" -> parts.toString) {
+      val early = df.filter(col("id") <= 60)
+      for ((name, d) <- Seq("some NULL" -> df, "NULL prefix" -> early,
+          "all NULL" -> allNull))
+        assert(maxAt(d) == scanMaxima(d), s"$name, $parts partitions")
+      assert(maxAt(allNull).isNullAt(0))
+      assert(!maxAt(allNull).isNullAt(2))
+    }
+  }
+
+  test("maxAt collects at most one summary row per shuffle partition") {
+    import spark.implicits._
+    val df = (1L to 3000L).map(i => (i % 997, i, 1L, BigDecimal(1), true))
+      .toDF("ts", "id", "a", "b", "at")
+    withConf("spark.sql.shuffle.partitions" -> "7") {
+      val n = PrefixSum.bucketSummaries(df, "ts", Seq(col("ts"), col("id")),
+        Seq("a" -> "ra"), col("at"), "ra", knownRange = None).count()
+      assert(n > 1 && n <= 7)
+    }
+  }
 }

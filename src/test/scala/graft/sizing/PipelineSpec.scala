@@ -2,6 +2,11 @@ package graft.sizing
 
 import graft.SparkTestBase
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** End-to-end EP1 golden test (SURVEY §5.3): CSV fixture → sinks + report,
   * every number hand-computed from the reference formulas.
@@ -129,5 +134,140 @@ class PipelineSpec extends SparkTestBase {
       "Cluster Sizing", "Query Counts", "Average Cluster Utilization")
       .foreach(s => assert(r.contains(s), s))
     assert(r.contains("Max Memory Per Node: 250.0 GB")) // Q7 fixed label
+  }
+
+  /** Every row over `pod_limit` (q3's shape) plus one skipped row: the
+    * kept set is empty.
+    */
+  private val allPrunedCsv =
+    """query_id,pool,start_time,end_time,duration_millis,reqd_cache_gb,reqd_agg_mem,memory_spilled_gb,cpu_time_sec,query_type,admission_wait,num_backends
+      |p1,etl,2021-07-12T00:01:00.000Z,2021-07-12T00:01:10.000Z,10000,150000,1,0,1,QUERY,0,1
+      |p2,bi,2021-07-12T00:01:05.000Z,2021-07-12T00:01:20.000Z,15000,120000,900,0,1,QUERY,0,2
+      |p3,etl,2021-07-12T00:02:00.000Z,2021-07-12T00:02:10.000Z,10000,1,,0,1,QUERY,0,1
+      |""".stripMargin
+
+  private def writeInput(text: String): (SizingConfig, String) = {
+    val dir = Files.createTempDirectory("graft-prepass").toFile
+    val in = new java.io.File(dir, "querylog.csv")
+    Files.writeString(in.toPath, text)
+    (SizingConfig(inputFile = Some(in.getAbsolutePath)), dir.getAbsolutePath)
+  }
+
+  /** `Pipeline.finish`'s routing, recomposed from the public layers. */
+  private def routed(cfg: SizingConfig): (DataFrame, DataFrame, DataFrame) = {
+    val raw = Pipeline.withEventInstants(
+      Pipeline.readQuerylogCsv(spark, cfg.inputFile.get))
+    val pooled = Routing.poolFilter(raw, cfg)
+    val (kept, pruned) = Routing.pruneSplit(
+      Formulas.derive(pooled.filter(!Routing.skipPredicate), cfg), cfg)
+    (kept, pruned, pooled.filter(Routing.skipPredicate))
+  }
+
+  for ((name, text) <- Seq("fixture" -> csv, "every row pruned" -> allPrunedCsv))
+    test(s"pre-pass report equals the standalone aggregates ($name)") {
+      val (cfg, _) = writeInput(text)
+      val (kept, pruned, skipped) = routed(cfg)
+      val got = Report.build(cfg, kept, Pipeline.concurrency(kept),
+        Report.routedCounts(kept, pruned, skipped))
+
+      val g = Aggregates.global(kept).head()
+      val r = kept.agg(
+        max(round(col("avg_vcores_per_node"), 2)),
+        max(round(col("avg_mem_per_node"), 2)),
+        max(round(col("avg_cache_per_node"), 2)),
+        max(round(col("avg_data_rate_per_node"), 2)),
+        max(round(col("avg_spill_per_node"), 2))).head()
+      val matrix = Aggregates.sizeMatrix(kept).collect().map { m =>
+        m.getAs[String]("tsize") -> Seq("count", "cache", "mem", "cpu",
+          "spill").map(d => d -> m.getAs[Long](d)).toMap
+      }.toMap
+      val pod = g.getAs[Long]("min_executor_pod_workload")
+      val tsizeWl = Bucketing.tsizeValue(pod)
+      val routedPools = kept.select("pool").union(pruned.select("pool"))
+        .distinct().collect().map(_.getString(0)).sorted.toSeq
+      val want = got.copy( // the concurrency fields are the sweep's
+        totalQueries = kept.count() + pruned.count(),
+        totalQueryTimeSec = g.getAs[Double]("total_query_time_sec"),
+        maxPodsQueryId = g.getAs[String]("max_pods_query_id"),
+        maxBackends = g.getAs[Int]("max_backends"),
+        maxVcores = r.getAs[Double](0),
+        maxMem = r.getAs[Double](1),
+        maxData = r.getAs[Double](2),
+        maxDataRate = r.getAs[Double](3),
+        maxSpill = r.getAs[Double](4),
+        pools = routedPools,
+        pruneCount = pruned.count(),
+        minExecutorPodWorkload = pod,
+        tsizeWorkload = tsizeWl,
+        constrainedBy = Aggregates.constrainedBy(matrix, tsizeWl),
+        matrix = matrix,
+        utilizationPct = Aggregates.utilizationPct(g, cfg))
+      assert(got == want)
+      assert(got.matrix.keySet == matrix.keySet)
+    }
+
+  test("the rounded maximum equals the maximum of the rounded values") {
+    // the pre-pass rounds max(x) once instead of every x: exact only
+    // because round(_, 2) is monotone — checked across half-way values,
+    // negatives and wide magnitudes, 40 groups of 50
+    import spark.implicits._
+    val rnd = new scala.util.Random(9)
+    val xs = (0 until 2000).map(i => (i % 40, rnd.nextInt(4) match {
+      case 0 => rnd.nextInt(100000) / 1000.0 + 0.005
+      case 1 => rnd.nextDouble() * 1e6
+      case 2 => -rnd.nextDouble()
+      case _ => rnd.nextInt(1000) / 100.0
+    }))
+    val diff = xs.toDF("g", "x").groupBy("g")
+      .agg(max(round(col("x"), 2)).as("a"), round(max(col("x")), 2).as("b"))
+      .filter(!(col("a") <=> col("b")))
+    assert(diff.isEmpty)
+  }
+
+  test("a run over a log with every row pruned reports an empty kept set") {
+    val (cfg, dir) = writeInput(allPrunedCsv)
+    val r = Pipeline.run(spark, cfg, dir)
+    assert(r.totalQueries == 2 && r.pruneCount == 2)
+    assert(r.matrix.isEmpty && r.constrainedBy.isEmpty)
+    assert(r.maxConcurrentQueries == 0 && r.minExecutorPodWorkload == 0)
+  }
+
+  /** Jobs one `Pipeline.run` starts on the fixture, counted by a
+    * SparkListener: 23 while the report's aggregates ran as their own
+    * passes and the sweep as a full prefix scan; 11 with them folded into
+    * the routing pre-pass and per-bucket summaries. Pinned so that
+    * splitting the pre-pass (or the sweep) again fails here.
+    */
+  private val RunJobs = 11
+
+  test(s"one Pipeline.run starts $RunJobs Spark jobs") {
+    val sc = spark.sparkContext
+    val tag = "graft.test.phase"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)).orNull match {
+          case "run" => jobs.incrementAndGet()
+          case "marker" => drained.countDown()
+          case _ =>
+        }
+    }
+    val (cfg, dir) = writeInput(csv)
+    sc.addSparkListener(listener)
+    try withConf("spark.sql.shuffle.partitions" -> "4",
+        "spark.sql.adaptive.enabled" -> "true") {
+      sc.setLocalProperty(tag, "run")
+      Pipeline.run(spark, cfg, dir)
+      // the listener bus is FIFO: once this job's start arrives, every
+      // job of the run has been counted
+      sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == RunJobs)
   }
 }
