@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * operator (q20) — all over the deterministic events→querylog adapter so
   * DuckDB can oracle-check the full surface.
   *
-  * q20 exercises the scalable two-pass prefix scan ([[graft.plans.PrefixSum]]):
-  * the oracle's single global window proves the distributed scan equals
-  * the sequential semantics.
+  * q20 runs the report's sweep ([[Concurrency.maxima]], per-bucket
+  * summaries of [[graft.plans.PrefixSum.maxAt]]) over integer units: the
+  * oracle's single global window proves the distributed fold equals the
+  * sequential semantics.
   */
 object Sizing extends QueryModule {
 
@@ -99,7 +100,22 @@ object Sizing extends QueryModule {
 
   // --- q20: sweep-line concurrency maxima (E1–E6) ------------------------
   private def q20(s: SparkSession, dir: String): DataFrame =
-    Concurrency.maxima(Concurrency.sweep(kept(s, dir)))
+    sweepMaxima(kept(s, dir), None)
+
+  /** q20's row ([[Concurrency.maximaCols]]) over `kept`: the sweep with
+    * the adapter's integer units as payload — pods, bytes per backend and
+    * milli-vcores per backend, so every column is an exact BIGINT.
+    * private[ops]: q73's batch parity leg runs the same sweep.
+    */
+  private[ops] def sweepMaxima(kept: DataFrame,
+      range: Option[(Double, Double)]): DataFrame =
+    Concurrency.maxima(kept, Seq(
+        "pods" -> col("min_executor_pod"),
+        "cache_b" -> col("cache_b_per_backend"),
+        "mem_b" -> col("mem_b_per_backend"),
+        "cpu_mv" -> col("cpu_mv_per_backend"),
+        "spill_b" -> col("spill_b_per_backend")), range)
+      .toDF(Concurrency.maximaCols: _*)
 
   // private[ops]: q73's oracle wraps this (stream maxima ≡ batch maxima)
   private[ops] def q20Sql = s"""${QuerylogAdapter.sqlCte(cfg)}

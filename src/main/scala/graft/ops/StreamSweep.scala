@@ -43,12 +43,13 @@ import org.apache.spark.sql.functions._
   * summaries (one tiny row per non-empty time bucket — bounded by the
   * analysis window, not the data).
   *
-  * Cost shape at sf0.1 (measured, DevStreamProbe): ≈1.5 s interval
-  * write+bounds, ≈5 s data micro-batch, ≈2.5 s sentinel/timeout flush,
-  * ≈4 s the batch q20 parity run — q73's bench time is the price of
-  * executing BOTH engines plus fixed micro-batch machinery, not a plan
-  * defect; the streamed operator itself is one 2|kept|-row shuffle and
-  * per-bucket local scans.
+  * Cost shape at sf0.1 (PERF.md, "q73 phase breakdown", measured while
+  * the parity leg still ran a materialized scan): ≈1 s derived querylog
+  * + persist, ≈0.5 s interval write, ≈1.5 s streaming drain, 2–2.9 s the
+  * batch q20 parity run — q73's bench time is the price of executing
+  * BOTH engines plus fixed micro-batch machinery, not a plan defect; the
+  * streamed operator itself is one 2|kept|-row shuffle and per-bucket
+  * local scans.
   */
 object StreamSweep extends QueryModule {
 
@@ -65,7 +66,7 @@ object StreamSweep extends QueryModule {
     import s.implicits._
     val kept = QuerylogAdapter.derived(s, dir, cfg)
       .filter(col("min_executor_pod") <= keptLimit)
-      .persist() // read 3×: bounds agg + interval write, batch sweep (×2 inside)
+      .persist() // read 3×: bounds agg, interval write, batch sweep
 
     // Bounds fold: 1 row, 2 columns — sizes the buckets and the sentinel.
     val mm = kept.agg(min(col("admitted_us")), max(col("end_us"))).head()
@@ -128,8 +129,10 @@ object StreamSweep extends QueryModule {
     } finally graft.Fs.deleteRecursively(tmp)
     val m = folded.getOrElse(sys.error("q73: no closed buckets — empty querylog?"))
 
-    // Parity against the batch operator on the same kept querylog.
-    val b = Concurrency.maxima(Concurrency.sweep(kept)).head()
+    // Parity against batch q20 on the same kept querylog; the bounds
+    // fold's span sizes its buckets too.
+    val b = Sizing.sweepMaxima(kept,
+      Some((minAdmittedUs.toDouble, maxEndUs.toDouble))).head()
     kept.unpersist()
     val matches = b.getLong(0) == m.maxConcurrentQueries &&
       b.getLong(1) == m.maxPods && b.getLong(2) == m.maxCache &&

@@ -62,11 +62,11 @@ object PrefixSum {
     * NULL group values are real keys end-to-end (null-safe carry join).
     */
   def scan(df: DataFrame, bucketCol: String, orderCols: Seq[Column],
-      sumCols: Seq[(String, String)], uniformBounds: Boolean = false,
+      sumCols: Seq[(String, String)],
       knownRange: Option[(Double, Double)] = None,
       groupCols: Seq[String] = Nil): DataFrame = {
     val bucketed = df.withColumn("__bucket",
-      bucketOf(df, bucketCol, uniformBounds, knownRange))
+      bucketOf(df, bucketCol, uniformBounds = false, knownRange))
     val local = localSums(bucketed, orderCols, sumCols, groupCols)
 
     // Per-bucket totals → exclusive prefix (carry-ins), computed LAZILY:
@@ -140,7 +140,7 @@ object PrefixSum {
     * `max_by` ranks it over the scan. Returns a one-row LOCAL frame: one
     * column per `dst` in its running type (NULL when `at` selects no row)
     * and `bucketCol`. Buckets split the [min, max] span of `bucketCol`
-    * evenly ([[scan]]'s `uniformBounds`); the input is evaluated once,
+    * evenly (not [[scan]]'s quantiles); the input is evaluated once,
     * plus the min/max pass unless `knownRange` is given.
     */
   def maxAt(df: DataFrame, bucketCol: String, orderCols: Seq[Column],
@@ -232,11 +232,9 @@ object PrefixSum {
     * non-trivial upstream should localCheckpoint first.
     */
   def rowNumber(df: DataFrame, bucketCol: String, orderCols: Seq[Column],
-      dst: String, groupCols: Seq[String] = Nil,
-      uniformBounds: Boolean = false): DataFrame =
+      dst: String, groupCols: Seq[String] = Nil): DataFrame =
     scan(df.withColumn("__one", lit(1L)), bucketCol, orderCols,
-      Seq("__one" -> dst), uniformBounds = uniformBounds,
-      groupCols = groupCols).drop("__one")
+      Seq("__one" -> dst), groupCols = groupCols).drop("__one")
 
   /** The local step [[scan]] and [[maxAt]] share: each `dst` is the
     * running sum of its `src` within a (group, `__bucket`) partition under
@@ -257,12 +255,12 @@ object PrefixSum {
     * ~numShufflePartitions contiguous range buckets, as a when-chain over
     * boundary literals — a pure function of row values, so every
     * recomputation assigns every row the same bucket. Boundaries:
-    *  - default: Greenwald-Khanna quantiles (no RNG) — robust to any key
-    *    distribution, costs one sketch aggregation pass;
-    *  - uniformBounds: min/max + even split — one cheap min/max agg,
-    *    right when the caller knows the key is near-uniform (event
-    *    timestamps); correctness never depends on balance, only the
-    *    local-scan parallelism does;
+    *  - [[scan]]: Greenwald-Khanna quantiles (no RNG) — robust to any
+    *    key distribution, costs one sketch aggregation pass;
+    *  - uniformBounds ([[maxAt]]): min/max + even split — one cheap
+    *    min/max agg, right for near-uniform keys (event timestamps);
+    *    correctness never depends on balance, only the local-scan
+    *    parallelism does;
     *  - knownRange: the caller already knows (or can compute more
     *    cheaply upstream) the [lo, hi] span — skips the eager pass over
     *    `df` entirely.

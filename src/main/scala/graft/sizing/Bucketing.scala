@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * (impala_query_sizing.py:71–84; dicts py:14–28). Quirk stances:
   *  - Q1: the cache-GB range dict (py:22–28) is dead code — every call
   *    site passes a ttype != 'cache' (py:252–259, 370) so the pod ranges
-  *    apply everywhere. We replicate that as the default and keep the
-  *    cache ranges available behind [[tsizeCacheGb]].
+  *    apply everywhere. We replicate that; the dead cache ranges are not
+  *    reproduced.
   *  - Q2: the reference returns None for values > 999 (py:79–84); we make
   *    the function total with CUSTOM as the open-ended top bucket.
   *
@@ -28,16 +28,6 @@ object Bucketing {
       .when(pods <= 20, "MEDIUM")
       .when(pods <= 40, "LARGE")
       .otherwise("CUSTOM") // Q2: total (reference: None above 999)
-
-  /** The reference's dead cache-GB ranges (py:22–28), kept for parity
-    * experiments (Q1).
-    */
-  def tsizeCacheGb(gb: Column): Column =
-    when(gb <= 400, "XSMALL")
-      .when(gb <= 2000, "SMALL")
-      .when(gb <= 4000, "MEDIUM")
-      .when(gb <= 8000, "LARGE")
-      .otherwise("CUSTOM")
 
   /** The t-shirt sizes in ascending order, as [[tsize]] names them. */
   val sizes: Seq[String] = Seq("XSMALL", "SMALL", "MEDIUM", "LARGE", "CUSTOM")

@@ -39,8 +39,8 @@ object Formulas {
   )
 
   /** All derived sizing columns (P2–P11) over the canonical querylog
-    * schema ([[Model.querylogSchema]]). Append-only: input columns pass
-    * through untouched.
+    * columns ([[Pipeline.readQuerylogCsv]]). Append-only: input columns
+    * pass through untouched.
     */
   def derive(df: DataFrame, cfg: SizingConfig): DataFrame = {
     val withBase = df

@@ -1,6 +1,5 @@
 package graft.sizing
 
-import graft.plans.PrefixSum
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -92,39 +91,27 @@ object Pipeline {
       col("admission_wait"),
       col("num_backends"))
 
-  /** Resource-delta events with the reference's per-event payload
-    * (py:311–333): UN-ceiled pods, per-backend GB shares, avg vcores, data
-    * rate. Doubles are carried as DECIMAL(38,9) so distributed partial
-    * sums are exact and order-independent; rendered values round to 2dp,
-    * far below the 1e-9 quantization.
+  /** The report's per-event sweep payload (py:311–333): UN-ceiled pods,
+    * per-backend GB shares, avg vcores, data rate. Doubles are carried as
+    * DECIMAL(38,9) so distributed partial sums are exact and
+    * order-independent; rendered values round to 2dp, far below the 1e-9
+    * quantization.
     */
-  private[sizing] def sweepEvents(derived: DataFrame): DataFrame = {
+  private[sizing] def sweepPayload: Seq[(String, Column)] = {
     def dec(c: Column): Column = c.cast("decimal(38,9)")
-    val podsRaw = greatest(col("ratio_data"), col("ratio_mem"),
-      col("ratio_cpu"), col("ratio_spill"))
-    val payload = Seq[(String, Column)](
-      "d_pods" -> dec(podsRaw),
-      "d_cache" -> dec(col("reqd_cache_gb") / col("num_backends")),
-      "d_mem" -> dec(col("reqd_agg_mem") / col("num_backends")),
-      "d_cpu" -> dec(col("avg_vcores_per_node")),
-      "d_data_rate" -> dec(col("avg_data_rate_per_node")),
-      "d_spill" -> dec(col("memory_spilled_gb") / col("num_backends")))
-    val start = struct(
-      col("admitted_us").as("ts_us") +: lit(1).as("kind") +:
-        lit(1L).as("d_count") +:
-        payload.map { case (n, c) => c.as(n) }: _*)
-    val end = struct(
-      col("end_us").as("ts_us") +: lit(0).as("kind") +:
-        lit(-1L).as("d_count") +:
-        payload.map { case (n, c) => (-c).cast("decimal(38,9)").as(n) }: _*)
-    derived
-      .select(col("query_id"), explode(array(start, end)).as("e"))
-      .select(col("query_id"), col("e.*"))
+    Seq(
+      "pods" -> dec(greatest(col("ratio_data"), col("ratio_mem"),
+        col("ratio_cpu"), col("ratio_spill"))),
+      "cache" -> dec(col("reqd_cache_gb") / col("num_backends")),
+      "mem" -> dec(col("reqd_agg_mem") / col("num_backends")),
+      "cpu" -> dec(col("avg_vcores_per_node")),
+      "data_rate" -> dec(col("avg_data_rate_per_node")),
+      "spill" -> dec(col("memory_spilled_gb") / col("num_backends")))
   }
 
   /** Sweep-line maxima over the kept rows (EP3, py:351–396): the maxima
     * of the running sums at start events, and the start instant where the
-    * running pods peak — one [[PrefixSum.maxAt]] job over the events,
+    * running pods peak — [[Concurrency.maxima]] over [[sweepPayload]],
     * returned as a one-row local frame. `range` is the [lo, hi] span of
     * the instants when the caller already has it (the routing pre-pass
     * computes it, [[Report.routedCounts]]); without it the bucket bounds
@@ -132,22 +119,8 @@ object Pipeline {
     * never changes the result.
     */
   def concurrency(derived: DataFrame,
-      range: Option[(Double, Double)] = None): DataFrame = {
-    val deltas = Seq("d_count", "d_pods", "d_cache", "d_mem", "d_cpu",
-      "d_data_rate", "d_spill")
-    // Guard: a row with an unparseable/missing end_time (schema allows
-    // null) would emit a null-instant event — PrefixSum buckets nulls
-    // into bucket 0 and the window sorts them FIRST, applying the end
-    // deltas before the query's start and silently depressing every
-    // running sum. Such rows cannot contribute a well-formed interval,
-    // so they are excluded from the sweep (kept in CSV/aggregate paths).
-    val withInstants = derived
-      .filter(col("admitted_us").isNotNull && col("end_us").isNotNull)
-    // py:384 `>=`: at equal pods the LATEST start wins (maxAt's tie rule)
-    PrefixSum.maxAt(sweepEvents(withInstants), "ts_us",
-        Seq(col("ts_us"), col("kind"), col("query_id")),
-        deltas.map(d => d -> d.replace("d_", "run_")),
-        at = col("d_count") > 0, argMaxOf = "run_pods", knownRange = range)
+      range: Option[(Double, Double)] = None): DataFrame =
+    Concurrency.maxima(derived, sweepPayload, range)
       .select(
         col("run_count").as("max_concurrent_queries"),
         col("run_pods").cast("double").as("max_pods_workload"),
@@ -157,7 +130,6 @@ object Pipeline {
         col("run_data_rate").cast("double").as("max_concurrent_data_rate"),
         col("run_spill").cast("double").as("max_concurrent_spill"),
         col("ts_us").as("max_pods_workload_start_us"))
-  }
 
   /** Full run: reads `cfg.inputFile`, writes the three sinks under
     * `outDir` (SURVEY §2.7 K1–K3), computes the report (K4).

@@ -26,12 +26,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     exclusive-prefix trick as the batch scan, O(buckets) work —
   *     typically inside `foreachBatch` or any downstream consumer.
   *
-  * Deltas are LONGs, same contract as the batch operator
-  * ([[graft.sizing.Concurrency]]): pods are counts, cache/mem/spill are
-  * bytes-per-backend, cpu is milli-vcores — integer units whose partial
-  * sums are exact and associativity-safe; doubles would silently lose
-  * low-order bits once a byte-count running sum crosses 2^53 (a few
-  * hundred concurrent 50 TiB-cache queries).
+  * Deltas are LONGs, the integer units q20 passes to the batch sweep
+  * ([[graft.sizing.Concurrency.maxima]]): pods are counts,
+  * cache/mem/spill are bytes-per-backend, cpu is milli-vcores — integer
+  * units whose partial sums are exact and associativity-safe; doubles
+  * would silently lose low-order bits once a byte-count running sum
+  * crosses 2^53 (a few hundred concurrent 50 TiB-cache queries).
   *
   * All instant arithmetic is µs-exact: Spark TimestampType is µs
   * precision, and [[tsUs]]/[[usTs]] round-trip the full µs through

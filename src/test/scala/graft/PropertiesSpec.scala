@@ -251,16 +251,13 @@ class PropertiesSpec extends SparkTestBase {
       }
       val df = ivals
         .toDF("query_id", "admitted_us", "end_us", "min_executor_pod")
-        .withColumn("cache_b_per_backend", lit(1L))
-        .withColumn("mem_b_per_backend", lit(1L))
-        .withColumn("cpu_mv_per_backend", lit(1L))
-        .withColumn("spill_b_per_backend", lit(1L))
-      val m = Concurrency.maxima(Concurrency.sweep(df)).head
+      val m = Concurrency.maxima(df, Seq("pods" -> col("min_executor_pod")))
+        .head
       val brute = ivals.map { case (_, t, _, _) =>
         ivals.filter { case (_, s, e, _) => s <= t && t < e }
           .map(_._4).sum
       }.max
-      assert(m.getAs[Long]("max_concurrent_pods") == brute)
+      assert(m.getAs[Long]("run_pods") == brute)
     }
   }
 

@@ -55,29 +55,6 @@ class PrefixSumSpec extends SparkTestBase {
     assert(out.schema("run").dataType.typeName == "long")
   }
 
-  test("uniformBounds stays correct on skewed keys (only balance degrades)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(17)
-    // 90% of keys in [0,10), rest spread to 10000 — uniform split puts
-    // most rows in bucket 0; the result must still be exact
-    val rows = (1L to 400L).map { i =>
-      val ts = if (rnd.nextInt(10) < 9) rnd.nextInt(10).toLong
-        else rnd.nextInt(10000).toLong
-      (ts, i, rnd.nextInt(11) - 5L)
-    }
-    val df = rows.toDF("ts", "id", "delta").repartition(4)
-    val got = PrefixSum.scan(df, "ts", Seq(col("ts"), col("id")),
-        Seq("delta" -> "run"), uniformBounds = true)
-      .select("ts", "id", "run").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(t => (t._1, t._2))
-    var acc = 0L
-    val want = rows.sortBy(t => (t._1, t._2)).map { case (ts, id, d) =>
-      acc += d; (ts, id, acc)
-    }
-    assert(got.toSeq == want)
-  }
-
   test("grouped scan runs one independent prefix sum per group") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
@@ -221,6 +198,32 @@ class PrefixSumSpec extends SparkTestBase {
         assert(maxAt(d) == scanMaxima(d), s"$name, $parts partitions")
       assert(maxAt(allNull).isNullAt(0))
       assert(!maxAt(allNull).isNullAt(2))
+    }
+  }
+
+  test("maxAt's even bounds stay exact on skewed keys (only balance degrades)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    // 90% of keys in [0,10), rest spread to 10000 — an even split of the
+    // span puts most rows in bucket 0; the result must still be exact
+    val rows = (1L to 400L).map { i =>
+      val ts = if (rnd.nextInt(10) < 9) rnd.nextInt(10).toLong
+        else rnd.nextInt(10000).toLong
+      (ts, i, rnd.nextInt(11) - 5L, BigDecimal(0), rnd.nextBoolean())
+    }
+    val df = rows.toDF("ts", "id", "a", "b", "at")
+      .withColumn("b", col("b").cast("decimal(38,9)")).repartition(4)
+    // the sequential fold: running `a` in (ts, id) order, maximum over
+    // `at` rows, argmax the latest `at` row reaching it
+    var (acc, best, arg) = (0L, Long.MinValue, -1L)
+    rows.sortBy(t => (t._1, t._2)).foreach { case (ts, _, a, _, at) =>
+      acc += a
+      if (at && acc >= best) { best = acc; arg = ts }
+    }
+    withConf("spark.sql.shuffle.partitions" -> "7") {
+      val got = maxAt(df)
+      assert(got.getLong(0) == best)
+      assert(got.getLong(2) == arg)
     }
   }
 

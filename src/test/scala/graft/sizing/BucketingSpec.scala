@@ -3,8 +3,8 @@ package graft.sizing
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** T-shirt bucketing boundaries (SURVEY §2.4): every range edge from
-  * impala_query_sizing.py:14–28, plus the Q2 totality stance (values the
+/** T-shirt bucketing boundaries (SURVEY §2.4): every pod range edge from
+  * impala_query_sizing.py:14–20, plus the Q2 totality stance (values the
   * reference maps to None land in CUSTOM).
   */
 class BucketingSpec extends SparkTestBase {
@@ -25,15 +25,6 @@ class BucketingSpec extends SparkTestBase {
   test("total above the reference's 999 ceiling (Q2 stance)") {
     assert(bucketOf(1000L) == "CUSTOM")
     assert(bucketOf(Long.MaxValue) == "CUSTOM")
-  }
-
-  test("cache-GB ranges (Q1 dead-code dict, kept behind tsizeCacheGb)") {
-    import spark.implicits._
-    val got = Seq(400L, 401L, 2000L, 2001L, 4000L, 4001L, 8000L, 8001L)
-      .toDF("gb").select(Bucketing.tsizeCacheGb(col("gb")))
-      .collect().map(_.getString(0)).toSeq
-    assert(got == Seq("XSMALL", "SMALL", "SMALL", "MEDIUM", "MEDIUM",
-      "LARGE", "LARGE", "CUSTOM"))
   }
 
   test("tsizeSql text matches the Column semantics") {

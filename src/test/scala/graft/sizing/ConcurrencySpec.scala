@@ -3,9 +3,10 @@ package graft.sizing
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Sweep-line invariants (SURVEY §5.2): the distributed operator must
-  * equal a brute-force interval-overlap count, running sums must return
-  * to zero after all ends, and the end-before-start tiebreak must hold.
+/** Sweep-line invariants (SURVEY §5.2) over q20's integer payload: the
+  * distributed operator must equal a brute-force interval-overlap count,
+  * the end-before-start tiebreak must hold, and a query without an end
+  * instant must not touch the sweep.
   */
 // Top-level: Spark encoders cannot instantiate a class nested in the
 // suite (no outer-scope instance on executors).
@@ -17,15 +18,22 @@ class ConcurrencySpec extends SparkTestBase {
   private def Q(id: String, start: Long, end: Long, pods: Long): Q =
     ConcQ(id, start, end, pods)
 
-  private def run(qs: Seq[Q]) = {
+  private def intervals(qs: Seq[Q]) = {
     import spark.implicits._
-    val df = qs.toDF("query_id", "admitted_us", "end_us", "min_executor_pod")
-      .withColumn("cache_b_per_backend", col("min_executor_pod") * 10)
-      .withColumn("mem_b_per_backend", col("min_executor_pod") * 100)
-      .withColumn("cpu_mv_per_backend", col("min_executor_pod") * 7)
-      .withColumn("spill_b_per_backend", lit(1L))
-    Concurrency.sweep(df)
+    qs.toDF("query_id", "admitted_us", "end_us", "min_executor_pod")
   }
+
+  /** The maxima row q20 computes, named as q20 names it. */
+  private def maxima(df: org.apache.spark.sql.DataFrame) =
+    Concurrency.maxima(df, Seq(
+        "pods" -> col("min_executor_pod"),
+        "cache_b" -> col("min_executor_pod") * 10,
+        "mem_b" -> col("min_executor_pod") * 100,
+        "cpu_mv" -> col("min_executor_pod") * 7,
+        "spill_b" -> lit(1L)))
+      .toDF(Concurrency.maximaCols: _*).head
+
+  private def run(qs: Seq[Q]) = maxima(intervals(qs))
 
   /** Brute force with the engine's tiebreak: at instant t a query counts
     * iff start <= t < end (ends sort before starts at equal instants).
@@ -41,27 +49,27 @@ class ConcurrencySpec extends SparkTestBase {
       val s = rnd.nextInt(1000).toLong
       Q(f"q$i%04d", s, s + 1 + rnd.nextInt(300), 1 + rnd.nextInt(5))
     }
-    val m = Concurrency.maxima(run(qs)).head
+    val m = run(qs)
     assert(m.getAs[Long]("max_concurrent_queries") == bruteMax(qs, _ => 1L))
     assert(m.getAs[Long]("max_concurrent_pods") == bruteMax(qs, _.pods))
   }
 
-  test("running sums return to zero after the last end") {
-    val rnd = new scala.util.Random(5)
-    val qs = (1 to 80).map { i =>
-      val s = rnd.nextInt(100).toLong
-      Q(s"q$i", s, s + 1 + rnd.nextInt(50), 1 + rnd.nextInt(3))
-    }
-    val last = run(qs)
-      .orderBy(col("ts_us").desc, col("kind").desc, col("query_id").desc)
-      .head
-    assert(last.getAs[Long]("run_count") == 0L)
-    assert(last.getAs[Long]("run_pods") == 0L)
+  test("a query with no end instant is left out of the sweep") {
+    // x starts after the a/b peak: were its NULL-instant end applied
+    // first, every running sum before x's start would drop by x's pods
+    val qs = Seq(Q("a", 0, 100, 3), Q("b", 50, 150, 5), Q("x", 200, 0, 7))
+    val noEnd = intervals(qs).withColumn("end_us",
+      when(col("query_id") =!= "x", col("end_us")))
+    val m = maxima(noEnd)
+    assert(m == run(qs.take(2)))
+    assert(m.getAs[Long]("max_concurrent_queries") == 2L)
+    assert(m.getAs[Long]("max_concurrent_pods") == 8L)
+    assert(m.getAs[Long]("max_pods_at_us") == 50L)
   }
 
   test("a query ending exactly when another starts does not overlap") {
     val qs = Seq(Q("a", 0, 100, 3), Q("b", 100, 200, 5))
-    val m = Concurrency.maxima(run(qs)).head
+    val m = run(qs)
     assert(m.getAs[Long]("max_concurrent_queries") == 1L)
     assert(m.getAs[Long]("max_concurrent_pods") == 5L)
   }
@@ -69,7 +77,7 @@ class ConcurrencySpec extends SparkTestBase {
   test("max_pods tie keeps the LATEST start (py:384 >= semantics)") {
     // two disjoint single-query peaks with equal pods
     val qs = Seq(Q("a", 0, 10, 4), Q("b", 20, 30, 4))
-    val m = Concurrency.maxima(run(qs)).head
+    val m = run(qs)
     assert(m.getAs[Long]("max_pods_at_us") == 20L)
   }
 
@@ -77,7 +85,7 @@ class ConcurrencySpec extends SparkTestBase {
     // footprint between [5,10) is 2 queries; end events at 10/12 never
     // create a new candidate — max is what a start saw.
     val qs = Seq(Q("a", 0, 10, 1), Q("b", 5, 12, 1), Q("c", 11, 13, 1))
-    val m = Concurrency.maxima(run(qs)).head
+    val m = run(qs)
     assert(m.getAs[Long]("max_concurrent_queries") == 2L)
   }
 }

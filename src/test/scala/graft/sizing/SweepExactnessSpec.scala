@@ -22,10 +22,11 @@ class SweepExactnessSpec extends SparkTestBase {
 
   private def oracle(derived: DataFrame): Row =
     PrefixSum.scan(
-        Pipeline.sweepEvents(derived
-          .filter(col("admitted_us").isNotNull && col("end_us").isNotNull)),
+        Concurrency.events(derived
+          .filter(col("admitted_us").isNotNull && col("end_us").isNotNull),
+          Pipeline.sweepPayload),
         "ts_us", Seq(col("ts_us"), col("kind"), col("query_id")),
-        deltas.map(d => d -> d.replace("d_", "run_")), uniformBounds = true)
+        deltas.map(d => d -> d.replace("d_", "run_")))
       .filter(col("d_count") > 0)
       .agg(
         max(col("run_count")).as("max_concurrent_queries"),
@@ -46,8 +47,9 @@ class SweepExactnessSpec extends SparkTestBase {
     * final decimal → double cast runs in Spark, as in the sweep.
     */
   private def sequential(derived: DataFrame): Row = {
-    val events = Pipeline.sweepEvents(derived
-        .filter(col("admitted_us").isNotNull && col("end_us").isNotNull))
+    val events = Concurrency.events(derived
+        .filter(col("admitted_us").isNotNull && col("end_us").isNotNull),
+        Pipeline.sweepPayload)
       .collect().sortBy(e => (e.getAs[Long]("ts_us"), e.getAs[Int]("kind"),
         e.getAs[String]("query_id")))
     val run = Array.fill(deltas.size)(JBigDecimal.ZERO)
